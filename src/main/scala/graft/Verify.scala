@@ -20,6 +20,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // as in Bench: each query computes from the parquet inputs, never
+      // from an entry an earlier query's build left in the SQL cache
+      spark.sharedState.cacheManager.clearCache()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -252,9 +252,8 @@ object Graft {
     * min-owner join — the B62 exchange class. */
   def noveltyScores(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
-    graft.CacheLifecycle.selfReleasing(
-      graft.operators.Curation.ngramNoveltyManaged(
-        df.select(col(idCol).as("doc_id"), col(textCol).as("text"))))
+    graft.operators.Curation.ngramNoveltyOf(
+      df.select(col(idCol).as("doc_id"), col(textCol).as("text")))
 
   /** k-anonymity risk report for any quasi-identifier columns — the
     * general form of the graded `op_k_anonymity` (same core; Sweeney
@@ -323,10 +322,12 @@ object Graft {
     * sample). Returns `(rnk, doc_id, w, r)`. Rows with w ≤ 0 are
     * dropped (they can never be sampled). The key is a map-side
     * projection and the top-k plans as TakeOrderedAndProject — one
-    * pass, no shuffle, at any corpus size. */
+    * pass, no shuffle, at any corpus size. The k sampled rows are
+    * ranked inside ONE array cell, so `k` is capped like
+    * [[coresetKcenter]]'s. */
   def sampleByWeight(df: DataFrame, idCol: String = "doc_id",
       weightCol: String = "w", k: Int = 25): DataFrame = {
-    require(k >= 1, s"sampleByWeight: need k >= 1 (got $k)")
+    require(k >= 1 && k <= 4096, s"sampleByWeight: need 1 <= k <= 4096 (got $k)")
     graft.operators.TrainingData.sampleWeightedOf(
       df.select(col(idCol).as("doc_id"), col(weightCol).as("w")), k)
   }
@@ -344,8 +345,8 @@ object Graft {
   def keywords(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 3): DataFrame = {
     require(k >= 1, s"keywords: need k >= 1 (got $k)")
-    graft.CacheLifecycle.selfReleasing(graft.operators.Mining.tfidfTopkManaged(
-      df.select(col(idCol).as("doc_id"), col(textCol).as("text")), k))
+    graft.operators.Mining.tfidfTopkOf(
+      df.select(col(idCol).as("doc_id"), col(textCol).as("text")), k)
   }
 
   /** Edit-distance-1 fuzzy self-join for any keyed corpus — the
@@ -366,8 +367,8 @@ object Graft {
   def fuzzyJoin(df: DataFrame, idCol: String = "doc_id",
       keyCol: String = "key", bucketCap: Int = 16): DataFrame = {
     require(bucketCap >= 2, s"fuzzyJoin: need bucketCap >= 2 (got $bucketCap)")
-    graft.CacheLifecycle.selfReleasing(graft.operators.Mining.fuzzyJoinManaged(
-      df.select(col(idCol).as("doc_id"), col(keyCol).as("key")), bucketCap))
+    graft.operators.Mining.fuzzyJoinOf(
+      df.select(col(idCol).as("doc_id"), col(keyCol).as("key")), bucketCap)
   }
 
   /** Reciprocal-rank fusion of ranker panels — the general form of
@@ -634,9 +635,9 @@ object Graft {
     * length duplicated. Because boundaries are content-defined, a
     * verbatim region shared under an insertion-shifted wrapper still
     * keys identically — the case fixed blocks and fixed-stride chunks
-    * both miss. The chunk pass is cached with one self-releasing
-    * handle (two consumers); census + rollup are digest-keyed
-    * aggregates with map-side partials, never pairs. */
+    * both miss. The chunk pass is pinned once for its two consumers;
+    * census + rollup are digest-keyed aggregates with map-side
+    * partials, never pairs. */
   def dedupBlocks(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text",
       gramChars: Int = graft.operators.TrainingData.CdcGram,
@@ -698,10 +699,9 @@ object Graft {
       textCol: String = "text", gramTokens: Int = 50): DataFrame = {
     require(gramTokens >= 2,
       s"a repeated-span gram needs >= 2 tokens (got $gramTokens)")
-    val (result, release) = graft.operators.TrainingData.repeatedSpansManaged(
+    graft.operators.TrainingData.repeatedSpansWith(
       df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
       gramTokens, hashGrams = true)
-    selfReleasing(result, release)
   }
 
   /** CCNet perplexity bucketing for any corpus (Wenzek et al. 2019,
@@ -723,21 +723,20 @@ object Graft {
     * scorer runs its bounded hot-prefix probe (one vocabulary-sized
     * aggregation job, see `ngramLmScores`) while BUILDING the plan —
     * call this when you intend to execute the result. (2) CACHING
-    * CONTRACT: the scores frame is cached so the bigram scoring runs
-    * once across its three consumers; as with [[ingestTriage]], a
-    * one-shot listener unpersists it after the first terminal action
-    * on the result, so repeated materializations recompute the scoring
-    * (correct, just slower). */
+    * CONTRACT: the scores frame is pinned so the bigram scoring runs
+    * once across its three consumers; as with [[ingestTriage]], the
+    * pin lives as long as the returned frame (or one derived from
+    * it), so a second action on the result reads the pinned scores
+    * instead of re-scoring. */
   def perplexityBuckets(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", tailFraction: Double = 1.0 / 3,
       headFraction: Double = 2.0 / 3): DataFrame = {
     require(tailFraction > 0 && tailFraction <= headFraction && headFraction < 1,
       s"need 0 < tailFraction <= headFraction < 1 " +
         s"(got $tailFraction, $headFraction)")
-    val (result, release) = graft.operators.Mining.perplexityBucketsWith(
+    graft.operators.Mining.perplexityBucketsWith(
       df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
       n => ceil(n * tailFraction), n => ceil(n * headFraction))
-    selfReleasing(result, release)
   }
 
   /** The Gopher rule-based quality gate for any corpus — the general
@@ -838,8 +837,8 @@ object Graft {
     * the trained tokenizer compresses it (`n_words`, `n_char_units`,
     * `n_bpe_units` — all integers, n_bpe ≤ n_char). Same reserved-`|`
     * contract, exhaustion behavior and tested `merges` cap as
-    * [[bpeTrainMerges]]; the loop's vocabulary cache is released by
-    * the self-releasing listener after the first consuming action. */
+    * [[bpeTrainMerges]]; the loop's pinned vocabulary lives as long as
+    * the returned frame. */
   def bpeSegmentDocs(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text",
       merges: Int = graft.operators.CorpusStats.BpeMerges): DataFrame = {
@@ -847,10 +846,9 @@ object Graft {
       s"bpeSegmentDocs: need 1 <= merges <= 64 (got $merges; the bound " +
         "is what the suite certifies — see bpeTrainMerges)")
     val idT = df.schema(idCol).dataType
-    val (result, release) = graft.operators.CorpusStats.bpeSegmentWith(
+    graft.operators.CorpusStats.bpeSegmentWith(
       df.select(validatedId(col(idCol), idT, "bpeSegmentDocs").as("doc_id"),
         col(textCol).as("text")), merges)
-    selfReleasing(result, release)
   }
 
   /** Count-Min frequency estimates for caller candidates over an item
@@ -884,16 +882,15 @@ object Graft {
     * maxes the estimator with no evidence — minCount 1 is allowed but
     * you will get hapax noise at the top). One corpus bigram shuffle;
     * marginals and the normalizer derive from the pair table itself.
-    * The cached pair table is released by the self-releasing listener
-    * after the first consuming action. */
+    * The pair table is pinned for its four consumers and lives as
+    * long as the returned frame. */
   def collocations(df: DataFrame, textCol: String = "text",
       minCount: Int = graft.operators.CorpusStats.PmiMinCount,
       top: Int = graft.operators.CorpusStats.PmiTop): DataFrame = {
     require(minCount >= 1 && top >= 1,
       s"collocations: need minCount >= 1 and top >= 1 (got $minCount, $top)")
-    val (result, release) = graft.operators.CorpusStats.statsPmiWith(
+    graft.operators.CorpusStats.statsPmiWith(
       df.select(col(textCol).as("text")), minCount, top)
-    selfReleasing(result, release)
   }
 
   /** Bloom-filter decontamination of a training corpus against an eval
@@ -967,20 +964,18 @@ object Graft {
     * ties at the cut are all kept, so slightly MORE than the fraction
     * can select (CCNet-style threshold, not rank, semantics). Docs
     * with < 2 tokens have no features and are out of scope. The
-    * per-doc scores frame is cached (three plan consumers) and
-    * released by a self-releasing listener after the first action
-    * that consumes the result. */
+    * per-doc scores frame is pinned (three plan consumers) and lives
+    * as long as the returned frame. */
   def dsirWeights(df: DataFrame, isTarget: Column,
       idCol: String = "doc_id", textCol: String = "text",
       keepFraction: Double = 0.25): DataFrame = {
     require(keepFraction > 0 && keepFraction <= 1,
       s"dsirWeights: need 0 < keepFraction <= 1 (got $keepFraction)")
     val idT = df.schema(idCol).dataType
-    val (result, release) = graft.operators.Curation.dsirWith(
+    graft.operators.Curation.dsirWith(
       df.withColumn("doc_id", validatedId(col(idCol), idT, "dsirWeights"))
         .withColumn("text", col(textCol)),
       isTarget, n => ceil(n * keepFraction))
-    selfReleasing(result, release)
   }
 
   /** Train the DSIR model batch-side and export it as bounded literals
@@ -1051,10 +1046,10 @@ object Graft {
       s"dedupLines: need lineTokens >= 1, minTokens >= 1, minDocs >= 2 " +
         s"(got $lineTokens, $minTokens, $minDocs)")
     val idT = df.schema(idCol).dataType
-    graft.CacheLifecycle.selfReleasing(graft.operators.Curation.dedupLinesManaged(
+    graft.operators.Curation.dedupLinesWith(
       df.select(validatedId(col(idCol), idT, "dedupLines").as("doc_id"),
         col(textCol).as("text")),
-      lineTokens, minTokens, minDocs, hashLines))
+      lineTokens, minTokens, minDocs, hashLines)
   }
 
   /** MinHash sketch audit for any corpus — the general form of the
@@ -1072,10 +1067,9 @@ object Graft {
   def minhashAudit(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val idT = df.schema(idCol).dataType
-    val (result, release) = graft.operators.LlmPipeline.minhashEstWith(
+    graft.operators.LlmPipeline.minhashEstWith(
       df.select(validatedId(col(idCol), idT, "minhashAudit").as("doc_id"),
         col(textCol).as("text")))
-    selfReleasing(result, release)
   }
 
   /** Greedy k-center coreset selection over an embedding column — the
@@ -1113,9 +1107,8 @@ object Graft {
   def corpusReport(df: DataFrame, textCol: String = "text",
       ranks: Int = graft.operators.Curation.ZipfRanks): DataFrame = {
     require(ranks >= 2, s"corpusReport: need ranks >= 2 (got $ranks)")
-    graft.CacheLifecycle.selfReleasing(
-      graft.operators.Curation.statsZipfManaged(
-        df.select(col(textCol).as("text")), ranks))
+    graft.operators.Curation.statsZipfWith(
+      df.select(col(textCol).as("text")), ranks)
   }
 
   /** Heaps'-law vocabulary-growth fit — the general form of the graded
@@ -1134,9 +1127,9 @@ object Graft {
       span: Int = graft.operators.Curation.HeapsSpan): DataFrame = {
     require(span >= 1, s"heapsGrowth: need span >= 1 (got $span)")
     val idT = df.schema(idCol).dataType
-    graft.CacheLifecycle.selfReleasing(graft.operators.Curation.statsHeapsManaged(
+    graft.operators.Curation.statsHeapsWith(
       df.select(validatedId(col(idCol), idT, "heapsGrowth").as("doc_id"),
-        col(textCol).as("text")), span))
+        col(textCol).as("text")), span)
   }
 
   /** Shared id guard for the corpus APIs: `id` must cast to long
@@ -1180,38 +1173,16 @@ object Graft {
     * the IVF vector-probe stage) is `op_incremental_e2e`.
     *
     * CACHING CONTRACT: the triage pins three BATCH-sized intermediate
-    * frames (probe/band-hit/admit) with `.cache()` — each feeds two
-    * consumers, and without the pin every consumer would replay all
-    * stages above it. The entries are plan-keyed, so a long-lived
-    * session calling this once per daily batch would otherwise
-    * accumulate one trio per distinct batch. This overload is
-    * SELF-RELEASING: a one-shot listener unpersists the trio after the
-    * first terminal action whose plan reads the returned frame, so the
-    * default API does not leak. Re-running an action on the result
-    * after that recomputes the stages (correct, just slower) — callers
-    * that materialize the result more than once should hold the
-    * explicit release handle from [[ingestTriageManaged]] instead. */
+    * frames (probe/band-hit/admit) — each feeds two consumers, and
+    * without the pin every consumer would replay all stages above it.
+    * The pins are computed during this call and live exactly as long
+    * as the returned frame (or one derived from it): a second action
+    * on the result reads their blocks, and once the caller drops the
+    * result Spark's context cleaner removes them, so a long-lived
+    * session calling this once per daily batch keeps no residue
+    * (docs/API.md, "Lifetime of cached intermediates"). */
   def ingestTriage(history: DataFrame, batch: DataFrame,
       idCol: String = "id", textCol: String = "text"): DataFrame = {
-    val (result, release) = ingestTriageManaged(history, batch, idCol, textCol)
-    selfReleasing(result, release)
-  }
-
-  /** Cache-lifecycle helper for the caching APIs ([[ingestTriage]],
-    * [[perplexityBuckets]]): the shared [[graft.CacheLifecycle]]
-    * one-shot listener — `release()` fires after the first terminal
-    * action whose plan reads `result`, so the default API never leaks
-    * its cached intermediates into a long-lived session. */
-  private def selfReleasing(result: DataFrame, release: () => Unit): DataFrame =
-    graft.CacheLifecycle.selfReleasing(result, release)
-
-  /** [[ingestTriage]] plus a release handle: `_2()` unpersists the
-    * three cached triage frames backing the result. Call it AFTER the
-    * result has been fully materialized (written/collected) — the
-    * result plan reads the cached frames, so releasing first forces a
-    * recompute (correct, just slower). */
-  def ingestTriageManaged(history: DataFrame, batch: DataFrame,
-      idCol: String = "id", textCol: String = "text"): (DataFrame, () => Unit) = {
     def prep(df: DataFrame): DataFrame =
       df.select(
         validatedId(col(idCol), df.schema(idCol).dataType, "ingestTriage").as("doc_id"),
@@ -1219,7 +1190,7 @@ object Graft {
     val (probed, nearHits, admitted) =
       graft.operators.Incremental.triageFrames(prep(history), prep(batch))
     val entries = admitted.groupBy("key").agg(min("doc_id").as("entry_id"))
-    val result = probed
+    probed
       .join(nearHits, Seq("doc_id"), "left")
       .join(entries, Seq("key"), "left")
       .select(col("doc_id").as("id"),
@@ -1230,9 +1201,6 @@ object Graft {
         col("near_hist").as("near_dup_of"),
         when(col("exact_hist").isNull && col("near_hist").isNull,
           col("entry_id")).as("entry_id"))
-    val release = () => Seq(probed, nearHits, admitted)
-      .foreach(_.unpersist(blocking = false))
-    (result, release)
   }
 
   /** Whole-file document SINK (the [[readDocuments]] counterpart, and

@@ -2,8 +2,24 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for the iterative ops, honoring the session's
-  * fault-tolerance configuration.
+/** Lineage truncation for the iterative ops, and the one way an
+  * operator pins an intermediate that several consumers read, honoring
+  * the session's fault-tolerance configuration.
+  *
+  * Lifetime of a pin: the truncated frame reads blocks registered with
+  * Spark's ContextCleaner (checkpoint files too, when
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`), so they
+  * live as long as some frame reads them and are dropped on the
+  * cleaner's next GC-driven sweep after that — no release handle, no
+  * plan-keyed `CacheManager` entry. Pins are EAGER (the default): the
+  * intermediate is computed once, when the operator builds its plan.
+  * A lazy pin is checkpointed at the end of the first job that reads
+  * it, which drops its lineage while a concurrent job of the same query
+  * (an AQE broadcast build or shuffle stage reading the same pin) may
+  * still be running; that job's SQL metric accumulators can then be
+  * garbage-collected under it ("Failed to update accumulator" errors,
+  * lost metrics). `eager = false` is for a loop whose only next action
+  * reads the frame.
   *
   * `localCheckpoint` blocks live only in executor storage: fast (no
   * distributed-FS write) but NOT fault-tolerant — on a cluster, losing

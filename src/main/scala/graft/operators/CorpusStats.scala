@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.OpQuery
+import graft.functions.Checkpoints
 import graft.plans.CharEntropy
 import graft.plans.RollingHash.rollingHash
 import graft.sources.Tables
@@ -276,14 +277,11 @@ object CorpusStats {
     bpeTrainWith(sp, docs(sp, dir).select(col("text")), BpeMerges)
 
   /** Core behind [[bpeTrain]] and `api.Graft.bpeTrainMerges`. The
-    * learned steps are driver-side once the loop returns, so the
-    * vocabulary cache is released synchronously here — no listener
-    * needed on either path. */
+    * learned steps are driver-side once the loop returns. */
   private[graft] def bpeTrainWith(sp: SparkSession, corpus: DataFrame,
       merges: Int): DataFrame = {
     import sp.implicits._
-    val (steps, _, release) = bpeLoop(corpus, merges)
-    release()
+    val (steps, _) = bpeLoop(corpus, merges)
     steps.toDF("step", "pair", "n", "units_after").orderBy("step")
   }
 
@@ -305,30 +303,22 @@ object CorpusStats {
     * small vocab and shuffles a huge one) and a per-doc rollup with
     * map-side partials. */
   def bpeSegment(sp: SparkSession, dir: String): DataFrame =
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps AND with
-    // op_pack_sequences_bpe (r18 ADVICE adjudicated r19, see
-    // TrainingData.repeatedSpansWith)
-    bpeSegmentWith(docs(sp, dir), BpeMerges)._1.orderBy("doc_id")
+    bpeSegmentWith(docs(sp, dir), BpeMerges).orderBy("doc_id")
 
   /** Core behind [[bpeSegment]], [[packSequencesBpe]] and
     * `api.Graft.bpeSegmentDocs`: per-doc unit counts under the trained
-    * vocabulary, plus the release handle for the loop's cached
-    * vocabulary frame (the result reads it lazily — release only
-    * after the first terminal action). */
-  private[graft] def bpeSegmentWith(corpus: DataFrame,
-      merges: Int): (DataFrame, () => Unit) = {
-    val (_, fin, release) = bpeLoop(corpus.select(col("text")), merges,
+    * vocabulary. */
+  private[graft] def bpeSegmentWith(corpus: DataFrame, merges: Int): DataFrame = {
+    val (_, fin) = bpeLoop(corpus.select(col("text")), merges,
       withUnits = false)
     val vocab = fin.select(col("w"), size(col("syms")).as("n_syms"))
-    val seg = corpus
+    corpus
       .select(col("doc_id"), explode(toks(col("text"))).as("w"))
       .join(vocab, Seq("w"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"),
         sum(length(col("w")) + 1).cast("long").as("n_char_units"),
         sum(col("n_syms").cast("long")).as("n_bpe_units"))
-    (seg, release)
   }
 
   /** Lineage-truncation cadence for [[bpeLoop]]: each merge step nests
@@ -344,13 +334,11 @@ object CorpusStats {
     * [[bpeSegment]] (B75): runs UP TO `merges` iterations — the loop
     * breaks cleanly when the vocabulary runs out of adjacent pairs
     * (every word fully merged to one symbol), returning the steps
-    * learned so far — and returns the learned steps, the FINAL
-    * `(w, cnt, syms)` vocabulary (the trained segmenter), and a
-    * release handle for the cached base vocabulary. One owner, so the
-    * apply side can never drift off the training fold. */
+    * learned so far — and returns the learned steps and the FINAL
+    * `(w, cnt, syms)` vocabulary (the trained segmenter). One owner,
+    * so the apply side can never drift off the training fold. */
   private def bpeLoop(corpus: DataFrame, merges: Int,
-      withUnits: Boolean = true)
-      : (Seq[(Int, String, Long, Long)], DataFrame, () => Unit) = {
+      withUnits: Boolean = true): (Seq[(Int, String, Long, Long)], DataFrame) = {
     val vocab0 = corpus
       .select(explode(toks(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
@@ -363,9 +351,9 @@ object CorpusStats {
       .select(col("w"), col("cnt"),
         concat(transform(sequence(lit(1), length(col("w"))),
           i => col("w").substr(i, lit(1))), array(lit("</w>"))).as("syms"))
-      .cache()  // the model frame: every iteration and action re-reads
-                // it instead of re-aggregating the corpus (vocab-sized;
-                // process-scoped by the B46/annRecall precedent)
+      // the model frame: every iteration and action re-reads it
+      // instead of re-aggregating the corpus (vocab-sized)
+      .transform(Checkpoints.truncate(_))
     var vocab = vocab0
     val steps = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long)]()
     var t = 1
@@ -408,7 +396,7 @@ object CorpusStats {
           t += 1
       }
     }
-    (steps.toSeq, vocab, () => { vocab0.unpersist(); () })
+    (steps.toSeq, vocab)
   }
 
   /** B74b — `op_pack_sequences_bpe`: sequence packing under the
@@ -429,9 +417,7 @@ object CorpusStats {
     * the identity element of the running offset). */
   def packSequencesBpe(sp: SparkSession, dir: String): DataFrame = {
     val corpus = docs(sp, dir)
-    // graded op: release handle dropped (process-scoped vocab cache,
-    // the B46 precedent — shared with op_bpe_segment's run)
-    val (seg, _) = bpeSegmentWith(
+    val seg = bpeSegmentWith(
       corpus.select(col("doc_id"), col("text")), BpeMerges)
     val counted = corpus.select(col("doc_id"), col("source"))
       .join(seg.select(col("doc_id"), col("n_bpe_units").as("n_tok")),
@@ -643,15 +629,11 @@ object CorpusStats {
     * itself (vocabulary-sized aggregates — the corpus is never read
     * twice); top-K via TakeOrderedAndProject, never a global sort. */
   def statsPmi(sp: SparkSession, dir: String): DataFrame =
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps (r18 ADVICE
-    // adjudicated r19, see TrainingData.repeatedSpansWith)
-    statsPmiWith(docs(sp, dir).select(col("text")), PmiMinCount, PmiTop)._1
+    statsPmiWith(docs(sp, dir).select(col("text")), PmiMinCount, PmiTop)
 
-  /** Core behind [[statsPmi]] and `api.Graft.collocations`. Returns
-    * the result plus a release handle for the cached pair table. */
+  /** Core behind [[statsPmi]] and `api.Graft.collocations`. */
   private[graft] def statsPmiWith(corpus: DataFrame, minCount: Int,
-      top: Int): (DataFrame, () => Unit) = {
+      top: Int): DataFrame = {
     val c2 = corpus
       .select(toks(col("text")).as("ts"))
       .filter(size(col("ts")) >= 2)
@@ -660,19 +642,19 @@ object CorpusStats {
         slice(col("ts"), lit(2), size(col("ts")) - 1).as("w2"))).as("bg"))
       .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .agg(count(lit(1)).as("c2"))
-      .cache() // the pair table: four consumers (marginals ×2, N, the
-               // PMI projection) — vocabulary-sized, the B46 precedent
+      // the pair table: four consumers (marginals ×2, N, the PMI
+      // projection) — vocabulary-sized, the B46 precedent
+      .transform(Checkpoints.truncate(_))
     val cl = c2.groupBy("w1").agg(sum(col("c2")).as("cl"))
     val cr = c2.groupBy("w2").agg(sum(col("c2")).as("cr"))
     val n = c2.agg(sum(col("c2")).as("n"))
-    val result = c2.filter(col("c2") >= minCount)
+    c2.filter(col("c2") >= minCount)
       .join(cl, Seq("w1")).join(cr, Seq("w2"))
       .crossJoin(broadcast(n))
       .select(col("w1"), col("w2"), col("c2"),
         (round(log(col("n") * col("c2") / (col("cl") * col("cr")) * lit(1.0)), 4)
           + lit(0.0)).as("pmi"))
       .orderBy(col("pmi").desc, col("w1"), col("w2")).limit(top)
-    (result, () => { c2.unpersist(); () })
   }
 
   // ---- B91: character-entropy quality gate ----------------------------------

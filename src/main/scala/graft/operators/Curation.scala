@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.OpQuery
+import graft.functions.Checkpoints
 import graft.functions.TextShingles
 import graft.plans.RollingHash.rollingHash
 import graft.sources.Tables
@@ -100,26 +101,21 @@ object Curation {
   /** Core behind [[sketchBloom]] and `api.Graft.bloomContaminate`: the
     * m-bit filter build + k-bit probe + 20 %-bar doc rollup over any
     * `train(doc_id, text)` against any `evalGrams(sh)`, without the
-    * graded total sort. Graded path drops the release handle
-    * (plan-keyed cache); the public API wires the listener. */
-  private[graft] def bloomWith(train: DataFrame, evalGrams: DataFrame): DataFrame =
-    bloomManaged(train, evalGrams)._1
-
-  /** [[bloomWith]] plus the release handle for the persisted eval-gram
-    * frame. r22 probe shape: the k-bit test is the SAME literal-mask
-    * membership test the streaming probe uses ([[bloomMaskOf]] — a
-    * bounded driver pull, ≤ [[BloomBits]]/64 longs by the geometry
-    * constant), applied per distinct gram, instead of exploding k bit
-    * rows per gram into a broadcast join against the bit set plus a
-    * (doc, gram) rollup — the mask IS the distinct bit set, so the
-    * verdict is identical (StreamingSpec already pins mask ≡ join),
-    * and the plan drops one whole aggregation and a k× row explosion
-    * (guide §4: replace join+explode+agg with an expression). The
-    * eval-gram frame is persisted: it feeds the mask build AND the
-    * exact-membership broadcast (two held-out shingle passes → one). */
-  private[graft] def bloomManaged(train: DataFrame,
-      evalGrams0: DataFrame): (DataFrame, () => Unit) = {
-    val evalGrams = evalGrams0.persist()
+    * graded total sort. r22 probe shape: the k-bit test is the SAME
+    * literal-mask membership test the streaming probe uses
+    * ([[bloomMaskOf]] — a bounded driver pull, ≤ [[BloomBits]]/64
+    * longs by the geometry constant), applied per distinct gram,
+    * instead of exploding k bit rows per gram into a broadcast join
+    * against the bit set plus a (doc, gram) rollup — the mask IS the
+    * distinct bit set, so the verdict is identical (StreamingSpec
+    * already pins mask ≡ join), and the plan drops one whole
+    * aggregation and a k× row explosion (guide §4: replace
+    * join+explode+agg with an expression). The eval-gram frame is
+    * pinned ([[Checkpoints.truncate]]): it feeds the mask build AND
+    * the exact-membership broadcast (two held-out shingle passes →
+    * one). */
+  private[graft] def bloomWith(train: DataFrame, evalGrams0: DataFrame): DataFrame = {
+    val evalGrams = Checkpoints.truncate(evalGrams0)
     val maskLit = typedlit(bloomMaskOf(evalGrams).toSeq)
     val inEval = evalGrams.withColumn("in_eval", lit(1))
     // cluster the corpus TEXT by doc_id before shingling: one cheap
@@ -135,7 +131,7 @@ object Curation {
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
       .distinct()
       .join(broadcast(inEval), Seq("sh"), "left")
-    val result = trainG
+    trainG
       .withColumn("h", rollingHash(col("sh"), lit(1), length(col("sh"))))
       .select(col("doc_id"), maskHit(maskLit, col("h")).as("bhit"),
         col("in_eval").isNotNull.as("ehit"))
@@ -147,7 +143,6 @@ object Curation {
         (col("n_bloom") >= col("n_exact")).as("sound"),
         (lit(5) * col("n_bloom") >= col("n_grams")).as("flag_bloom"),
         (lit(5) * col("n_exact") >= col("n_grams")).as("flag_exact"))
-    (result, () => { evalGrams.unpersist(); () })
   }
 
   /** The k (bit) rows of each gram in `df` (adds `bit`, keeps all
@@ -269,41 +264,32 @@ object Curation {
     * range, not the corpus), exactly like B63 — one integer threshold
     * broadcasts back; never a global sort, never a rank. */
   def dsirWeights(sp: SparkSession, dir: String): DataFrame =
-    // graded path: release handle deliberately dropped — the cache is
-    // plan-keyed (sameResult canonicalization), so every graded rep
-    // shares ONE process-scoped entry; the self-releasing listener
-    // belongs on the public API where per-call corpora differ (r18
-    // ADVICE adjudicated r19, see repeatedSpansWith)
-    dsirWith(docs(sp, dir), col("source") === DsirTargetSource)._1
+    dsirWith(docs(sp, dir), col("source") === DsirTargetSource)
       .persist().orderBy("doc_id")
 
   /** Core behind [[dsirWeights]] and `api.Graft.dsirWeights`: feature
     * hash → smoothed log-ratio table → per-doc mean score →
     * tie-inclusive top-fraction threshold, over any
     * `corpus(doc_id, text)` with `isTarget` any boolean expression
-    * over its columns (the graded op passes `source = 'src0'`).
-    * Returns the result plus a release handle for the per-doc scores
-    * cache. */
+    * over its columns (the graded op passes `source = 'src0'`). */
   private[graft] def dsirWith(corpus: DataFrame, isTarget: Column,
-      keepNum: Column => Column = n => ceil(n / 4.0)): (DataFrame, () => Unit) = {
-    val (lam, perDoc, thr, release) = dsirParts(corpus, isTarget, keepNum)
-    val out = perDoc.crossJoin(broadcast(thr))
+      keepNum: Column => Column = n => ceil(n / 4.0)): DataFrame = {
+    val (_, perDoc, thr) = dsirParts(corpus, isTarget, keepNum)
+    perDoc.crossJoin(broadcast(thr))
       .select(col("doc_id"), col("is_t").as("is_target"),
         col("n_bigrams"), col("avg_lr"), col("w_i"),
         (col("w_i") >= col("t")).as("selected"))
-    val _ = lam // the λ frame is the B77s model export's half of the parts
-    (out, release)
   }
 
   /** The shared DSIR machinery behind [[dsirWith]] (B69) and the B77s
-    * model export: λ table (F rows), cached per-doc scores, the
-    * tie-inclusive threshold frame, and ONE release handle for every
-    * frame persisted here. One owner — the stream gate's literals can
-    * never drift off the graded batch model. */
+    * model export: λ table (F rows), pinned per-doc scores and the
+    * tie-inclusive threshold frame. One owner — the stream gate's
+    * literals can never drift off the graded batch model. Frames are
+    * pinned with [[Checkpoints.truncate]]. */
   private def dsirParts(corpus: DataFrame, isTarget: Column,
-      keepNum: Column => Column): (DataFrame, DataFrame, DataFrame, () => Unit) = {
+      keepNum: Column => Column): (DataFrame, DataFrame, DataFrame) = {
     val sp = corpus.sparkSession
-    // persisted (r22): the hashed bucket stream feeds the F-row model
+    // pinned (r22): the hashed bucket stream feeds the F-row model
     // aggregate AND the per-doc scoring join — unpersisted, the corpus
     // tokenize + bigram concat + rolling hash (the op's dominant
     // per-row cost) ran once per consumer (the "B46 two-pass shape"
@@ -319,20 +305,20 @@ object Curation {
         concat(col("bg.w1"), lit(" "), col("bg.w2")).as("g"))
       .withColumn("b", rollingHash(col("g"), lit(1), length(col("g"))) % DsirBuckets)
       .select(col("doc_id"), col("is_t"), col("b"))
-      .persist()
+      .transform(Checkpoints.truncate(_))
     // ONE F-row aggregate carries both distributions (raw = every
     // occurrence, target = the target-slice occurrences)
     val cnts = feats.groupBy("b").agg(count(lit(1)).as("cr"),
       count(when(col("is_t"), lit(1))).as("ct"))
     // every bucket needs a λ even when unseen (add-1 keeps it finite):
-    // seed from the full 0..F-1 range, not the data. Persisted (r22):
+    // seed from the full 0..F-1 range, not the data. Pinned (r22):
     // `totals` and `lam` BOTH hang off this frame, and without the
-    // (128-row) cache each re-ran the F-row aggregate over feats.
+    // (128-row) pin each re-ran the F-row aggregate over feats.
     val buckets = sp.range(DsirBuckets).select(col("id").as("b"))
       .join(cnts, Seq("b"), "left")
       .select(col("b"), coalesce(col("cr"), lit(0L)).as("cr"),
         coalesce(col("ct"), lit(0L)).as("ct"))
-      .persist()
+      .transform(Checkpoints.truncate(_))
     val totals = buckets.agg(sum(col("cr")).as("tr"), sum(col("ct")).as("tt"))
     val lam = buckets.crossJoin(broadcast(totals))
       .select(col("b"),
@@ -340,7 +326,7 @@ object Curation {
           log((col("cr") + lit(1.0)) / (col("tr") + lit(DsirBuckets.toDouble))))
           .as("lam"))
     // three consumers (doc count, histogram, final flag join) read the
-    // per-doc scores — cache the skinny frame so the feature pass runs
+    // per-doc scores — pin the skinny frame so the feature pass runs
     // once (corpus-row-sized, spills to disk at 100 TB)
     val perDoc = feats.join(broadcast(lam), Seq("b"))
       .groupBy(col("doc_id"), col("is_t"))
@@ -351,7 +337,7 @@ object Curation {
       .agg(count(lit(1)).as("n_bigrams"),
         (round(avg(col("lam")), 4) + lit(0.0)).as("avg_lr"))
       .withColumn("w_i", round(col("avg_lr") * 10000).cast("long"))
-      .cache()
+      .transform(Checkpoints.truncate(_))
     val nDocs = perDoc.agg(count(lit(1)).as("n"))
     val hist = perDoc.groupBy("w_i").agg(count(lit(1)).as("c"))
     val cum = hist.withColumn("cum",
@@ -360,18 +346,17 @@ object Curation {
     val thr = cum.crossJoin(broadcast(nDocs))
       .filter(col("cum") >= keepNum(col("n")))
       .agg(max(col("w_i")).as("t"))
-    (lam, perDoc, thr,
-      () => { perDoc.unpersist(); feats.unpersist(); buckets.unpersist(); () })
+    (lam, perDoc, thr)
   }
 
   /** B77s model export: train the B69 model batch-side and collect it
     * as plan-embeddable literals — the F λ doubles (bucket-ordered)
     * and the integer threshold. Bounded by the geometry constant F
     * (+1 scalar), the same by-construction driver pull as the B76s
-    * bitmask. Releases the training scores cache before returning. */
+    * bitmask. */
   private[graft] def dsirModelOf(corpus: DataFrame, isTarget: Column,
       keepNum: Column => Column = n => ceil(n / 4.0)): (Array[Double], Long) = {
-    val (lam, _, thr, release) = dsirParts(corpus, isTarget, keepNum)
+    val (lam, _, thr) = dsirParts(corpus, isTarget, keepNum)
     // ONE driver job for the whole model (r21): the λ table and the
     // threshold union into a single bounded collect (threshold row
     // marked b = -1; w_i is a rounded 4-dp score ×10⁴, far inside
@@ -384,7 +369,6 @@ object Curation {
         val b = r.getLong(0)
         if (b < 0) t = r.getDouble(1).toLong else arr(b.toInt) = r.getDouble(1)
       }
-    release()
     (arr, t)
   }
 
@@ -520,16 +504,7 @@ object Curation {
     * oracle. */
   private[graft] def dedupLinesWith(corpus: DataFrame,
       lineTokens: Int = LineTokens, minTokens: Int = LineMinTokens,
-      minDocs: Int = LineMinDocs, hashLines: Boolean = false): DataFrame =
-    dedupLinesManaged(corpus, lineTokens, minTokens, minDocs, hashLines)._1
-
-  /** [[dedupLinesWith]] plus the release handle for the persisted line
-    * frame (graded path drops it — plan-keyed cache; the public API
-    * wires the self-releasing listener). */
-  private[graft] def dedupLinesManaged(corpus: DataFrame,
-      lineTokens: Int = LineTokens, minTokens: Int = LineMinTokens,
-      minDocs: Int = LineMinDocs,
-      hashLines: Boolean = false): (DataFrame, () => Unit) = {
+      minDocs: Int = LineMinDocs, hashLines: Boolean = false): DataFrame = {
     val lines = corpus
       .select(col("doc_id"), toks(col("text")).as("ts"))
       .filter(size(col("ts")) >= 1)
@@ -542,13 +517,13 @@ object Curation {
         slice(col("ts"), col("line_id") * lineTokens + 1, lit(lineTokens)))
       .select(col("doc_id"), col("line_id").cast("int").as("line_id"),
         array_join(col("lt"), " ").as("line"), size(col("lt")).as("llen"))
-    // persisted (r21): the line frame feeds the dup-count aggregation
-    // AND the join-back probe side — unpersisted, the tokenize + block
+    // pinned (r21): the line frame feeds the dup-count aggregation
+    // AND the join-back probe side — unpinned, the tokenize + block
     // split ran twice per execution (4 corpus scans → 2, the union
     // arms). Line-rows-sized (the corpus re-blocked; spills at scale).
     val keyed =
       (if (hashLines) lines.withColumn("lk", xxhash64(col("line")))
-       else lines.withColumn("lk", col("line"))).persist()
+       else lines.withColumn("lk", col("line"))).transform(Checkpoints.truncate(_))
     val dup = keyed.filter(col("llen") >= minTokens)
       .groupBy("lk").agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
@@ -571,7 +546,7 @@ object Curation {
     // salt; the graded oracle is the plain join), and when the dup set
     // is broadcast-small Catalyst still broadcasts the exploded side —
     // the salt costs nothing on the happy path.
-    val result = Skew.saltedJoin(keyed, dup, Seq("lk"), LineSalts, col("doc_id"), "left")
+    Skew.saltedJoin(keyed, dup, Seq("lk"), LineSalts, col("doc_id"), "left")
       .withColumn("dup", coalesce(col("isdup"), lit(false)))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_lines"),
@@ -581,7 +556,6 @@ object Curation {
             struct(col("line_id"), col("line"))))),
           s => s.getField("line")), " ").as("text_clean"))
       .withColumn("kept", col("n_dup") < col("n_lines"))
-    (result, () => { keyed.unpersist(); () })
   }
 
   // ---- B80: corpus report — Heaps' law vocabulary growth -------------------
@@ -634,14 +608,7 @@ object Curation {
     * one-row report over any `corpus(doc_id, text)`; `span` sizes the
     * prefix buckets. */
   private[graft] def statsHeapsWith(corpus: DataFrame,
-      span: Int = HeapsSpan): DataFrame =
-    statsHeapsManaged(corpus, span)._1
-
-  /** [[statsHeapsWith]] plus the release handle for the persisted
-    * bucket frame (graded path drops it — plan-keyed cache; the public
-    * API wires the self-releasing listener). */
-  private[graft] def statsHeapsManaged(corpus: DataFrame,
-      span: Int = HeapsSpan): (DataFrame, () => Unit) = {
+      span: Int = HeapsSpan): DataFrame = {
     val dt = corpus.select(col("doc_id"), explode(toks(col("text"))).as("t"))
     // first-occurrence bucket per type (vocab-sized), new types per bucket
     val nv = dt.groupBy("t").agg(min(col("doc_id")).as("fd"))
@@ -666,12 +633,12 @@ object Curation {
       // packOffsets reuse lesson)
       .filter(col("ck").isNotNull)
       .repartition(col("ck"))
-      // persisted (r21): the bucket frame feeds both the within-chunk
+      // pinned (r21): the bucket frame feeds both the within-chunk
       // prefix sums (pts) and the chunk-base aggregation (bases) —
-      // unpersisted, each consumer re-ran the corpus tokenize +
+      // unpinned, each consumer re-ran the corpus tokenize +
       // both bucket aggregations (5 corpus scans per execution → 3).
       // Bucket-sized (corpus/256 rows), the cheapest frame here.
-      .persist()
+      .transform(Checkpoints.truncate(_))
     val wIn = Window.partitionBy("ck").orderBy("b")
       .rowsBetween(Window.unboundedPreceding, 0)
     val within = bt
@@ -693,7 +660,7 @@ object Curation {
       sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
     val tot = dt.agg(countDistinct(col("doc_id")).as("n_docs"),
       count(lit(1)).as("n_tokens"), countDistinct(col("t")).as("n_types"))
-    val result = tot.crossJoin(broadcast(reg))
+    tot.crossJoin(broadcast(reg))
       // try_divide: a single prefix point makes the OLS denominator 0
       // and ANSI-mode `/` throws — the declared domain edge reports a
       // NULL fit instead (the oracle never reaches it; graded corpora
@@ -706,7 +673,6 @@ object Curation {
         (round(col("beta"), 4) + lit(0.0)).as("heaps_beta"),
         (round((col("sy") - col("beta") * col("sx")) / col("nr"), 4) + lit(0.0))
           .as("heaps_lnk"))
-    (result, () => { bt.unpersist(); () })
   }
 
   /** B80 oracle — shared with the registry entry below. */
@@ -772,22 +738,14 @@ object Curation {
     * regression head (the graded op's declared 50). */
   private[graft] def statsZipfWith(corpus: DataFrame,
       ranks: Int = ZipfRanks): DataFrame = {
-    statsZipfManaged(corpus, ranks)._1
-  }
-
-  /** [[statsZipfWith]] plus the release handle for the persisted
-    * unigram model. PERSISTED since r21: `uni` feeds the totals agg
-    * and (through the ranked head) the regression and top-token
-    * branches — the corpus tokenize + explode + count ran three times
-    * per execution. Vocabulary-sized (the model; the B46 cache
-    * class). Graded path drops the handle; `api.Graft.corpusReport`
-    * wires the listener. */
-  private[graft] def statsZipfManaged(corpus: DataFrame,
-      ranks: Int = ZipfRanks): (DataFrame, () => Unit) = {
+    // pinned since r21: `uni` feeds the totals agg and (through the
+    // ranked head) the regression and top-token branches — unpinned,
+    // the corpus tokenize + explode + count ran three times per
+    // execution. Vocabulary-sized (the model; the B46 class).
     val uni = corpus
       .select(explode(toks(col("text"))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
-      .persist()
+      .transform(Checkpoints.truncate(_))
     val tot = uni.agg(sum(col("c")).as("n_tokens"),
       count(lit(1)).as("n_types"),
       sum(col("c") * log(col("c"))).as("sclnc"))
@@ -806,13 +764,12 @@ object Curation {
         sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
     val top1 = ranked.filter(col("rank") === 1)
       .select(col("t").as("top_token"), col("c").as("top_cnt"))
-    val result = tot.crossJoin(broadcast(reg)).crossJoin(broadcast(top1))
+    tot.crossJoin(broadcast(reg)).crossJoin(broadcast(top1))
       .select(col("n_tokens"), col("n_types"), col("top_token"), col("top_cnt"),
         round(log(col("n_tokens")) - col("sclnc") / col("n_tokens"), 4)
           .as("entropy"),
         round((col("nr") * col("sxy") - col("sx") * col("sy")) /
           (col("nr") * col("sxx") - col("sx") * col("sx")), 4).as("zipf_slope"))
-    (result, () => { uni.unpersist(); () })
   }
 
   // ---- B99: per-doc n-gram novelty -------------------------------------------
@@ -845,30 +802,22 @@ object Curation {
   }
 
   /** Core behind [[ngramNovelty]] and `api.Graft.noveltyScores` over
-    * any `corpus(doc_id, text)`; docs too short to shingle drop.
-    * Graded path drops the release handle (plan-keyed cache); the
-    * public API wires the self-releasing listener. */
-  private[graft] def ngramNoveltyOf(corpus: DataFrame): DataFrame =
-    ngramNoveltyManaged(corpus)._1
-
-  /** [[ngramNoveltyOf]] plus the release handle for the persisted
-    * distinct-gram frame — a NO-OP since r22 (kept so the public API's
-    * listener wiring is shape-stable): the r21 formulation computed
-    * the owner table as a separate min-agg and joined it back, which
-    * keyed two different exchanges (g vs (doc_id, g)) and needed the
-    * gram frame persisted to avoid re-running the shingle + md5 +
-    * distinct build per consumer. r22 folds the owner attribution into
-    * ONE min-over-window pass partitioned by the gram key: same
-    * `own = min(doc_id) per g` values, one gram-keyed exchange + sort
-    * instead of agg-exchange + join (whose SMJ sorted both sides
-    * anyway), single consumer — nothing left to persist (guide §2.4:
-    * remove the shuffle outright rather than cache around it). */
-  private[graft] def ngramNoveltyManaged(
-      corpus: DataFrame): (DataFrame, () => Unit) = {
+    * any `corpus(doc_id, text)`; docs too short to shingle drop. The
+    * r21 formulation computed the owner table as a separate min-agg
+    * and joined it back, which keyed two different exchanges (g vs
+    * (doc_id, g)) and needed the gram frame persisted to avoid
+    * re-running the shingle + md5 + distinct build per consumer. r22
+    * folds the owner attribution into ONE min-over-window pass
+    * partitioned by the gram key: same `own = min(doc_id) per g`
+    * values, one gram-keyed exchange + sort instead of agg-exchange +
+    * join (whose SMJ sorted both sides anyway), single consumer —
+    * nothing left to persist (guide §2.4: remove the shuffle outright
+    * rather than cache around it). */
+  private[graft] def ngramNoveltyOf(corpus: DataFrame): DataFrame = {
     val gr = graft.functions.TextShingles.withShingles(corpus, col("text"))
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
       .select(col("doc_id"), md5(col("sh")).as("g")).distinct()
-    val result = gr
+    gr
       .withColumn("own", min("doc_id").over(Window.partitionBy("g")))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_grams"),
@@ -876,7 +825,6 @@ object Curation {
       .withColumn("novelty",
         round(col("n_novel").cast("double") / col("n_grams"), 6))
       .withColumn("is_dup", col("n_novel") === 0)
-    (result, () => ())
   }
 
   // ---- registry ------------------------------------------------------------

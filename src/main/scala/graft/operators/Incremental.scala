@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.OpQuery
+import graft.functions.Checkpoints
 import graft.sources.Tables
 
 /** The COMPOSED daily-ingest pipeline: the incremental-family pieces
@@ -59,7 +60,7 @@ object Incremental {
     // batch union — so materializing `probed` + the history band index
     // re-scanned the documents parquet five times per execution. One
     // scan now feeds all arms; (doc_id, text)-sized, the same class as
-    // the emb prep cache below (plan-keyed on the graded path).
+    // the emb prep cache below.
     val d = Tables.documents(sp, dir).select(col("doc_id"), col("text")).persist()
     val history = d.filter(col("doc_id") % 4 === 0)
       .select((col("doc_id") * 2).as("doc_id"), col("text"))
@@ -126,11 +127,13 @@ object Incremental {
     *
     * The triage frames are BATCH-sized (the daily increment, not the
     * corpus) and each feeds two consumers — its gated downstream stage
-    * AND the final evidence assembly — so they are cached: without the
-    * cache each consumer replays every stage above it (probed would
-    * run ~4x). Plan-keyed, so repeated runs share one entry; at 100 TB
-    * caching the increment is the intended shape. Shared by the graded
-    * op and [[graft.api.Graft.ingestTriage]]. */
+    * AND the final evidence assembly — so they are pinned
+    * ([[Checkpoints.truncate]]): without the pin each consumer replays
+    * every stage above it (probed would run ~4x). A pin lives as long
+    * as a frame that reads it, so a long-lived session running one
+    * triage per daily batch keeps no residue once a day's result is
+    * dropped; at 100 TB pinning the increment is the intended shape.
+    * Shared by the graded op and [[graft.api.Graft.ingestTriage]]. */
   private[graft] def triageFrames(history: DataFrame,
       batch: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val key = md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
@@ -138,14 +141,15 @@ object Incremental {
       .groupBy("key").agg(min("doc_id").as("exact_hist"))
     val probed = batch.withColumn("key", key)
       .join(histKeys, Seq("key"), "left")
-      .cache()
+      .transform(Checkpoints.truncate(_))
     val nonExact = probed.filter(col("exact_hist").isNull)
       .select("doc_id", "text", "key")
     val nearHits = LlmPipeline.minhashBanded(nonExact.select("doc_id", "text"))
       .join(LlmPipeline.minhashHistoryIndex(history), Seq("band_id", "band_key"))
       .groupBy("doc_id").agg(min("hist_id").as("near_hist"))
-      .cache()
-    val admitted = nonExact.join(nearHits, Seq("doc_id"), "left_anti").cache()
+      .transform(Checkpoints.truncate(_))
+    val admitted = nonExact.join(nearHits, Seq("doc_id"), "left_anti")
+      .transform(Checkpoints.truncate(_))
     (probed, nearHits, admitted)
   }
 

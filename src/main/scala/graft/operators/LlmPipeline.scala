@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.OpQuery
+import graft.functions.Checkpoints
 import graft.sources.Tables
 
 /** Tier-B LLM-data-pipeline operators (SURVEY.md §2 B16–B21): the
@@ -460,19 +461,15 @@ object LlmPipeline {
     * band buckets, the signature compare, the distinct-gram join and
     * the per-doc counts (r18; the r16 formulation re-derived it five
     * times — 5.7 s vs a 2.75 s quiet floor at sf0.1, the board's one
-    * `weak`). The graded path drops the release handle — the cache is
-    * plan-keyed, so every graded rep shares ONE process-scoped entry
-    * (r18 ADVICE adjudicated r19, see TrainingData.repeatedSpansWith);
-    * `api.Graft.minhashAudit` wires the self-releasing listener. */
+    * `weak`). */
   def minhashEst(sp: SparkSession, dir: String): DataFrame =
-    minhashEstWith(minhashCorpus(sp, dir))._1.persist().orderBy("doc_a", "doc_b")
+    minhashEstWith(minhashCorpus(sp, dir)).persist().orderBy("doc_a", "doc_b")
 
   /** Core behind [[minhashEst]] and `api.Graft.minhashAudit`: the
     * estimator-vs-exact audit over ANY `corpus(doc_id, text)`, without
-    * the graded total sort. Returns the result plus a release handle
-    * that unpersists the shared shingle/signature frame. */
-  private[graft] def minhashEstWith(corpus: DataFrame): (DataFrame, () => Unit) = {
-    // ONE shingle+signature pass over the corpus, persisted: grams is
+    * the graded total sort. */
+  private[graft] def minhashEstWith(corpus: DataFrame): DataFrame = {
+    // ONE shingle+signature pass over the corpus, pinned: grams is
     // per-doc DISTINCT shingles (array_distinct ≡ the old exploded
     // .distinct(), order irrelevant downstream), sig the 8-slot
     // rotation minhash — so n_a/n_b are map-side sizes, not a shuffle.
@@ -482,7 +479,7 @@ object LlmPipeline {
       .select(col("doc_id"),
         array_distinct(col("shingles")).as("grams"),
         graft.plans.MinHashSignature.minhashSig(col("hs"), NumHashes, 4).as("sig"))
-      .persist()
+      .transform(Checkpoints.truncate(_))
     val pairs = pairsFromBanded(bandsFromSigs(shingled.select(col("doc_id"), col("sig"))))
     val sigs = shingled.select(col("doc_id"), col("sig"))
     val grams = shingled.select(col("doc_id"), explode(col("grams")).as("sh"))
@@ -492,7 +489,7 @@ object LlmPipeline {
       .join(grams.select(col("doc_id").as("doc_a"), col("sh")), Seq("doc_a"))
       .join(grams.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    val result = pairs
+    pairs
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), Seq("doc_a"))
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), Seq("doc_b"))
       .withColumn("n_match",
@@ -506,7 +503,6 @@ object LlmPipeline {
         col("n_a"), col("n_b"), col("n_inter"), col("n_union"),
         (col("n_match") >= NumHashes / 2).as("est_high"),
         (lit(2) * col("n_inter") >= col("n_union")).as("jac_high"))
-    (result, () => { shingled.unpersist(); () })
   }
 
   /** Candidate pairs (doc_a < doc_b) shared by B17 and the component
@@ -629,14 +625,7 @@ object LlmPipeline {
 
   /** The closure itself, over any (doc_a, doc_b) pair frame — see
     * [[dedupCc]] for the algorithm and scale notes. */
-  private[graft] def connectedComponents(pairs: DataFrame): DataFrame =
-    // Loop planning mode hook: adaptive by default ('pinned' trades
-    // AQE's in-loop skew defense for one job per superstep probe — the
-    // A/B history is in the LoopPlanning scaladoc). The hook hands
-    // back `pairs` re-rooted on the pin-scoped session (identity under
-    // the adaptive default); the returned frame reads checkpointed
-    // blocks.
-    graft.functions.LoopPlanning.pinned(pairs) { pairs =>
+  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
     // persist the pair list BEFORE mirroring it (r22 — the pagerank
     // pairs0 repair, guide §2.4): `pairs` appears in BOTH union arms
     // below, so materializing the edge cache ran the entire upstream
@@ -663,17 +652,14 @@ object LlmPipeline {
     // propagate+confirm pair; multi-bucket clusters start one hop
     // ahead. Both directions are in `edges`, so every node appears as
     // src and no node is lost by the groupBy.
-    // LAZY checkpoint (one job saved per run): the first superstep's
-    // convergence probe is the next action anyway, and it reads the
-    // seed TWICE (the msgs join and the jump lookup) — the lazy
-    // persist materializes the seed blocks on first use inside that
-    // job, so the second consumer reads blocks, same as eager, without
-    // the separate up-front materialization job.
+    // EAGER checkpoint: the first superstep reads the seed TWICE (the
+    // msgs join and the jump lookup), and under AQE both can be
+    // concurrent broadcast builds — a lazy seed would be checkpointed
+    // under the second one (Checkpoints scaladoc).
     var labels = graft.functions.Checkpoints.truncate(
       edges.groupBy(col("src").as("id"))
         .agg(min(col("dst")).as("nbr"))
-        .select(col("id"), least(col("id"), col("nbr")).as("comp")),
-      eager = false)
+        .select(col("id"), least(col("id"), col("nbr")).as("comp")))
     // every currently-persisted label frame (at most 2 mid-superstep);
     // the failure path unpersists them ALL, the success path keeps only
     // the final one (whose blocks the returned frame reads)
@@ -732,10 +718,11 @@ object LlmPipeline {
     }
     edges.unpersist(); pairs0.unpersist()
     val sizes = labels.groupBy("comp").agg(count(lit(1)).as("csize"))
+    // pinned: the sort's range sampling and the sort itself both read it
     labels.join(sizes, "comp")
       .select(col("id").as("doc_id"), col("comp").as("component"), col("csize"))
-      .persist().orderBy("doc_id")
-    }
+      .transform(Checkpoints.truncate(_)).orderBy("doc_id")
+  }
 
   // ---- B18: cosine top-k similarity ----------------------------------------
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.OpQuery
+import graft.functions.Checkpoints
 import graft.functions.KMeansLite
 import graft.plans.VectorKernels
 import graft.sources.Tables
@@ -136,8 +137,8 @@ object Mining {
   /** Core behind [[selectKcenter]] and `api.Graft.coresetKcenter`.
     * All K actions run inside this call and the returned frame is a
     * driver-assembled LocalRelation, so the corpus cache is released
-    * synchronously before returning — no listener, no leak on either
-    * path. Empty input fails loudly; `k` greater than the number of
+    * synchronously before returning — nothing outlives the call.
+    * Empty input fails loudly; `k` greater than the number of
     * vectors returns the selection that exists (every vector picked —
     * the greedy traversal has nothing left to cover). */
   private[graft] def selectKcenterWith(emb: DataFrame, k: Int): DataFrame = {
@@ -288,14 +289,7 @@ object Mining {
   /** Core: PageRank over the undirected closure of `pairs(a, b)` (each
     * input pair contributes both directions; pairs must be distinct).
     * Exposed separately for known-answer specs on planted graphs. */
-  def pagerankRanks(pairs: DataFrame, iters: Int): DataFrame =
-    // Loop planning mode hook: adaptive by default (AQE's runtime
-    // re-plan is the only in-loop skew defense; the A/B history is in
-    // the LoopPlanning scaladoc), 'pinned' available where the fixed
-    // superstep shape makes per-stage re-planning pure overhead. The
-    // hook hands back `pairs` re-rooted on the pin-scoped session
-    // (identity under the adaptive default).
-    graft.functions.LoopPlanning.pinned(pairs) { pairs =>
+  def pagerankRanks(pairs: DataFrame, iters: Int): DataFrame = {
     // persist the DISTINCT pair list before mirroring it (r21, guide
     // §2.4): `pairs` appears twice in rawEdges (forward + swapped) and
     // rawEdges twice more (deg agg, edge build) — without the cache the
@@ -348,7 +342,7 @@ object Mining {
     } catch { case e: Throwable =>
       pinned.foreach(_.unpersist()); edges.unpersist(); pairs0.unpersist(); throw e
     }
-    }
+  }
 
   /** Same three unrolled power iterations as before, but each one is a
     * plain hash aggregation over an edges⋈contributions join: the
@@ -524,7 +518,7 @@ object Mining {
         slice(col("ts"), lit(1), size(col("ts")) - 1).as("w1"),
         slice(col("ts"), lit(2), size(col("ts")) - 1).as("w2"))).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    // the bigram MODEL is cached and everything model-shaped DERIVES
+    // the bigram MODEL is pinned and everything model-shaped DERIVES
     // from it (r21, guide §2.3 "aggregate before you shuffle / don't
     // recompute what an aggregate already holds"): the pre-r21 plan
     // aggregated the corpus THREE more times after c2 — once for c1,
@@ -532,20 +526,21 @@ object Mining {
     // distinct shuffle), once more re-exploding for the probe — four
     // tokenize+explode passes per run. Now: c1(w1) = Σ_w2 c2(w1,w2)
     // (identical counts by construction, a vocabulary-sized rollup of
-    // the cache), and |vocab| = |distinct w1 ∪ distinct last-tokens|
+    // the pin), and |vocab| = |distinct w1 ∪ distinct last-tokens|
     // (every token is a bigram PREFIX except each doc's last; toks
     // already holds the ≥2-token docs the scores are defined over) —
     // the last-token pass projects ONE array element per doc, no
     // explode, no instance-sized distinct. Two corpus passes total
     // (model agg + scoring instances), both stated by the oracle. The
-    // cache is vocabulary-sized (the bigram LM itself, the artifact a
+    // pin is vocabulary-sized (the bigram LM itself, the artifact a
     // production run stores; spills to disk at 100 TB).
-    val c2 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c2")).cache()
+    val c2 = big.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+      .transform(Checkpoints.truncate(_))
     val c1 = c2.groupBy("w1").agg(sum("c2").as("c1"))
     val vocab = c2.select(col("w1").as("t")).union(
         toks.select(element_at(col("ts"), size(col("ts"))).as("t")))
       .agg(countDistinct(col("t")).as("v"))
-    // hot-prefix detection: one bounded probe of the cached model. The
+    // hot-prefix detection: one bounded probe of the pinned model. The
     // hot SET is tiny by construction (prefixes above a partition-sized
     // instance count — the Zipf head), so collect at most
     // MaxHotPrefixLiterals+1 keys and route by LITERAL predicate:
@@ -641,13 +636,8 @@ object Mining {
     * percentile filter should run: histogram, threshold, map-side
     * filter; never a global sort. */
   def perplexityFilter(sp: SparkSession, dir: String): DataFrame =
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps (r18 ADVICE
-    // adjudicated r19: the listener here made every rep after the
-    // first recompute cold, a measured 2.9x regression; see
-    // TrainingData.repeatedSpansWith)
     perplexityBucketsWith(docs(sp, dir),
-      n => ceil(n / 3.0), n => ceil(n * 2 / 3.0))._1.persist().orderBy("doc_id")
+      n => ceil(n / 3.0), n => ceil(n * 2 / 3.0)).persist().orderBy("doc_id")
 
   /** Core behind [[perplexityFilter]] and `api.Graft.perplexityBuckets`:
     * the same histogram → integer-threshold → map-side-bucket plan
@@ -655,21 +645,17 @@ object Mining {
     * count to the cumulative-count levels where tail ends and head
     * begins (the graded op passes the oracle's exact `ceil(n/3.0)` /
     * `ceil(n·2/3.0)` expressions; the API derives them from caller
-    * fractions). Returns the result plus a release handle that
-    * unpersists the cached scores frame (the public API wires it to a
-    * self-releasing listener; `ngramLmScores`' internal unigram-model
-    * cache stays — it is vocabulary-sized, shared with op_ngram_lm,
-    * and orders of magnitude smaller than the corpus). */
+    * fractions). */
   private[graft] def perplexityBucketsWith(corpus: DataFrame,
-      cut1: Column => Column, cut2: Column => Column): (DataFrame, () => Unit) = {
+      cut1: Column => Column, cut2: Column => Column): DataFrame = {
     // three consumers (histogram, doc count, final bucket join) read the
-    // scores — cache the (doc_id, score) frame so B46's bigram scoring
-    // runs ONCE (it is the query's whole cost; the cached frame is three
+    // scores — pin the (doc_id, score) frame so B46's bigram scoring
+    // runs ONCE (it is the query's whole cost; the pinned frame is three
     // skinny columns, corpus-row-sized, spills to disk at 100 TB)
     val scores = ngramLmScores(corpus)
       .select(col("doc_id"), col("avg_logp"),
         round(col("avg_logp") * 10000).cast("long").as("s_i"))
-      .cache()
+      .transform(Checkpoints.truncate(_))
     val hist = scores.groupBy("s_i").agg(count(lit(1)).as("c"))
     val cum = hist.withColumn("cum",
       sum(col("c")).over(Window.orderBy("s_i")
@@ -678,13 +664,12 @@ object Mining {
       .agg(
         min(when(col("cum") >= cut1(col("n")), col("s_i"))).as("t1"),
         min(when(col("cum") >= cut2(col("n")), col("s_i"))).as("t2"))
-    val result = scores.crossJoin(broadcast(th))
+    scores.crossJoin(broadcast(th))
       .select(col("doc_id"), col("avg_logp"),
         when(col("s_i") <= col("t1"), lit("tail"))
           .when(col("s_i") <= col("t2"), lit("middle"))
           .otherwise(lit("head")).as("bucket"),
         (col("s_i") > col("t1")).as("kept"))
-    (result, () => { scores.unpersist(); () })
   }
 
   private val perplexityFilterOracle: String =
@@ -876,34 +861,27 @@ object Mining {
 
   /** Core behind [[tfidfTopk]] and `api.Graft.keywords`: top-k terms
     * per doc over any `corpus(doc_id, text)`, without the graded
-    * total sort. Graded path drops the release handle (plan-keyed
-    * cache); the public API wires the self-releasing listener. */
-  private[graft] def tfidfTopkOf(corpus: DataFrame, k: Int): DataFrame =
-    tfidfTopkManaged(corpus, k)._1
-
-  /** [[tfidfTopkOf]] plus the release handle for the persisted TF
-    * table (r21): it feeds the DF aggregation and the scoring join —
-    * unpersisted, both re-ran the corpus tokenize + explode +
-    * (doc, term) aggregation. (doc, term)-sized — the TF table any IR
-    * pipeline materializes anyway. */
-  private[graft] def tfidfTopkManaged(corpus: DataFrame,
-      k: Int): (DataFrame, () => Unit) = {
+    * total sort. The TF table is pinned (r21): it feeds the DF
+    * aggregation and the scoring join — unpinned, both re-ran the
+    * corpus tokenize + explode + (doc, term) aggregation.
+    * (doc, term)-sized — the TF table any IR pipeline materializes
+    * anyway. */
+  private[graft] def tfidfTopkOf(corpus: DataFrame, k: Int): DataFrame = {
     val tf = corpus
       .select(col("doc_id"),
         explode(filter(split(col("text"), " "), t => t =!= "")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist()
+      .transform(Checkpoints.truncate(_))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = corpus.agg(count(lit(1)).as("n"))
     val s = tf.join(df, Seq("term")).crossJoin(broadcast(n))
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
         (col("tf") * (log((col("n") + 1) / (col("df") + 1)) + 1)).as("score"))
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
-    val result = s.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    s.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
       .select(col("doc_id"), col("rnk"), col("term"),
         col("tf").cast("int").as("tf"), col("df").cast("int").as("df"),
         round(col("score"), 6).as("score"))
-    (result, () => { tf.unpersist(); () })
   }
 
   // ---- B92: deletion-neighborhood fuzzy join --------------------------------
@@ -966,24 +944,17 @@ object Mining {
   /** Core behind [[fuzzyJoin]] and `api.Graft.fuzzyJoin`: dist-≤-1
     * pairs over any `corpus(doc_id, key)`, without the graded total
     * sort. Deletion-neighborhood is exact for distance 1; larger
-    * radii need d-deletion neighborhoods (compose upstream). Graded
-    * path drops the release handle (plan-keyed cache, the
-    * repeatedSpansWith precedent); the public API wires the
-    * self-releasing listener. */
-  private[graft] def fuzzyJoinOf(corpus: DataFrame, cap: Int): DataFrame =
-    fuzzyJoinManaged(corpus, cap)._1
-
-  /** [[fuzzyJoinOf]] plus the release handle for the persisted capped
-    * variant frame. PERSISTED since r21: the candidate expansion is a
-    * self-join on `vk`, and when the build side broadcasts there is no
-    * exchange for ReuseExchange to dedup — the r21 plan audit caught
-    * the ENTIRE variant build (3 corpus scans, the distinct exchange,
-    * the WindowGroupLimit cap) executing TWICE, once per join side.
-    * One cached compute now feeds both sides; variant-rows-sized
-    * ((keyLen+1)× the corpus — the dedup_substring grams class,
-    * spills to disk at scale). */
-  private[graft] def fuzzyJoinManaged(corpus: DataFrame,
-      cap: Int): (DataFrame, () => Unit) = {
+    * radii need d-deletion neighborhoods (compose upstream).
+    *
+    * The capped variant frame is PINNED (since r21): the candidate
+    * expansion is a self-join on `vk`, and when the build side
+    * broadcasts there is no exchange for ReuseExchange to dedup — the
+    * r21 plan audit caught the ENTIRE variant build (3 corpus scans,
+    * the distinct exchange, the WindowGroupLimit cap) executing
+    * TWICE, once per join side. One pinned compute now feeds both
+    * sides; variant-rows-sized ((keyLen+1)× the corpus — the
+    * dedup_substring grams class, spills to disk at scale). */
+  private[graft] def fuzzyJoinOf(corpus: DataFrame, cap: Int): DataFrame = {
     val vars = corpus
       .filter(col("key").isNotNull && length(col("key")) >= 1)
       .select(col("doc_id"), col("key"),
@@ -998,16 +969,15 @@ object Mining {
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
     val capped = vars.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= cap).drop("rk")
-      .persist()
+      .transform(Checkpoints.truncate(_))
     val a = capped.select(col("doc_id").as("a_id"), col("key").as("a_key"), col("vk"))
     val b = capped.select(col("doc_id").as("b_id"), col("key").as("b_key"), col("vk"))
-    val result = a.join(b, Seq("vk"))
+    a.join(b, Seq("vk"))
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id", "a_key", "b_key").distinct()
       .select(col("a_id"), col("b_id"),
         levenshtein(col("a_key"), col("b_key")).cast("int").as("dist"))
       .filter(col("dist") <= 1)
-    (result, () => { capped.unpersist(); () })
   }
 
   // ---- registry ------------------------------------------------------------

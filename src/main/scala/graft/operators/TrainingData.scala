@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.OpQuery
+import graft.functions.Checkpoints
 import graft.sources.Tables
 import graft.functions.TextShingles
 
@@ -1115,10 +1116,7 @@ object TrainingData {
       .union(base.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") * 2 + 1).as("doc_id"),
           concat(lit("injected preamble sentence "), col("text")).as("text")))
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps (see
-    // repeatedSpansWith); the public API wires the listener
-    blockDedupManaged(chunkCdcWith(corpus, CdcGram, CdcDivisor, CdcRem))._1
+    blockDedupWith(chunkCdcWith(corpus, CdcGram, CdcDivisor, CdcRem))
       .persist().orderBy("doc_id")
   }
 
@@ -1126,19 +1124,12 @@ object TrainingData {
     * rollup over ANY `chunks(doc_id, chunk_len, chunk_md5, …)` frame
     * (extra columns ignored) — compose with [[chunkCdcWith]] /
     * `api.Graft.chunkContentDefined`, or feed externally stored chunk
-    * manifests. Self-releases the chunk cache after the first
-    * materialization (per-call corpora differ on the public API, so
-    * entries would otherwise accumulate); callers that materialize
-    * twice hold [[blockDedupManaged]]. */
-  private[graft] def blockDedupWith(chunks: DataFrame): DataFrame =
-    graft.CacheLifecycle.selfReleasing(blockDedupManaged(chunks))
-
-  /** [[blockDedupWith]] plus the release handle for the persisted
-    * chunk frame (the chunk kernel pass is the dominant cost and has
-    * two consumers — the per-doc totals and the census semi-join). */
-  private[graft] def blockDedupManaged(chunks: DataFrame): (DataFrame, () => Unit) = {
+    * manifests. The chunk frame is pinned ([[Checkpoints.truncate]]:
+    * the chunk kernel pass is the dominant cost and has two consumers
+    * — the per-doc totals and the census semi-join). */
+  private[graft] def blockDedupWith(chunks: DataFrame): DataFrame = {
     val ch = chunks.select(col("doc_id"), col("chunk_len"), col("chunk_md5"))
-      .persist()
+      .transform(Checkpoints.truncate(_))
     // DISTINCT docs per block key: the pre-aggregate on the distinct
     // pair dodges countDistinct's Expand (the standing gotcha) and is
     // itself the map-side-combined heavy step
@@ -1150,7 +1141,7 @@ object TrainingData {
     val dup = ch.join(shared.select("chunk_md5"), Seq("chunk_md5"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_dup_chunks"),
         sum(col("chunk_len")).as("dup_len"))
-    val result = tot.join(dup, Seq("doc_id"), "left")
+    tot.join(dup, Seq("doc_id"), "left")
       .select(col("doc_id"),
         col("n_chunks").cast("int").as("n_chunks"),
         col("total_len").cast("int").as("total_len"),
@@ -1159,7 +1150,6 @@ object TrainingData {
         (coalesce(col("dup_len"), lit(0L)).cast("double") / col("total_len"))
           .as("dup_ratio"),
         (coalesce(col("dup_len"), lit(0L)) * 2 >= col("total_len")).as("flagged"))
-    (result, () => { ch.unpersist(); () })
   }
 
   /** Salt fan-out for the rewrite's owner join-back (the B70
@@ -1210,34 +1200,24 @@ object TrainingData {
       .union(base.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") * 2 + 1).as("doc_id"),
           concat(lit("injected preamble sentence "), col("text")).as("text")))
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps (see
-    // repeatedSpansWith); the public API wires the listener
-    blockRewriteManaged(
-        chunkCdcWith(corpus, CdcGram, CdcDivisor, CdcRem, withText = true))._1
+    blockRewriteWith(
+        chunkCdcWith(corpus, CdcGram, CdcDivisor, CdcRem, withText = true))
       .orderBy("doc_id")
   }
 
   /** Core behind `api.Graft.dedupBlocksRewrite`: owner census +
     * rewrite over ANY `chunks(doc_id, chunk_id, chunk_len, chunk_md5,
     * chunk_txt, …)` frame (extra columns ignored) — compose with
-    * [[chunkCdcWith]]`(withText = true)`. Self-releases the chunk
-    * cache after the first materialization (per-call corpora differ
-    * on the public API); callers that materialize twice hold
-    * [[blockRewriteManaged]]. */
-  private[graft] def blockRewriteWith(chunks: DataFrame): DataFrame =
-    graft.CacheLifecycle.selfReleasing(blockRewriteManaged(chunks))
-
-  /** [[blockRewriteWith]] plus the release handle for the persisted
-    * chunk frame (the chunk kernel pass has two consumers — the owner
-    * census and the rewrite join). */
-  private[graft] def blockRewriteManaged(chunks: DataFrame): (DataFrame, () => Unit) = {
+    * [[chunkCdcWith]]`(withText = true)`. The chunk frame is pinned
+    * ([[Checkpoints.truncate]]): the chunk kernel pass has two
+    * consumers — the owner census and the rewrite join. */
+  private[graft] def blockRewriteWith(chunks: DataFrame): DataFrame = {
     val ch = chunks.select(col("doc_id"), col("chunk_id"), col("chunk_len"),
         col("chunk_md5"), col("chunk_txt"))
-      .persist()
+      .transform(Checkpoints.truncate(_))
     // owner per duplicated block: one row per key — min doc over the
     // DISTINCT (key, doc) pairs (pre-aggregated, dodging countDistinct's
-    // Expand as in blockDedupManaged)
+    // Expand as in blockDedupWith)
     val owners = ch.select(col("chunk_md5"), col("doc_id")).distinct()
       .groupBy("chunk_md5")
       .agg(count(lit(1)).as("nd"), min(col("doc_id")).as("owner"))
@@ -1247,7 +1227,7 @@ object TrainingData {
         col("doc_id"), "left")
       .withColumn("removed",
         col("owner").isNotNull && col("doc_id") =!= col("owner"))
-    val result = marked.groupBy("doc_id")
+    marked.groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_chunks"),
         sum(col("removed").cast("long")).cast("int").as("n_removed"),
         sum(when(!col("removed"), col("chunk_len")).otherwise(lit(0L)))
@@ -1257,7 +1237,6 @@ object TrainingData {
             struct(col("chunk_id"), col("chunk_txt"))))),
           s => s.getField("chunk_txt")), "").as("text_clean"))
       .withColumn("kept", col("n_removed") < col("n_chunks"))
-    (result, () => { ch.unpersist(); () })
   }
 
   /** The CDC chunking CTE chain over a caller-named corpus relation —
@@ -1427,28 +1406,14 @@ object TrainingData {
     * gram groups and perturbs the affected docs' counts by ±1 per
     * colliding pair — either direction — at ~10⁻⁷ of groups even at
     * 10¹² grams); `false` keeps the string key the byte-exact DuckDB
-    * oracle grades. */
-  private[graft] def repeatedSpansWith(corpus: DataFrame, k: Int,
-      hashGrams: Boolean): DataFrame =
-    // graded path: the release handle is deliberately dropped. The
-    // cache is PLAN-KEYED (CacheManager canonicalizes via sameResult),
-    // so repeated graded invocations of this same plan share ONE
-    // process-scoped entry — no per-rep accumulation (r18 ADVICE
-    // adjudicated r19: wiring the self-releasing listener here instead
-    // made every bench rep after the first recompute cold, a measured
-    // 1.9x regression; the listener belongs on the public API, where
-    // per-call corpora differ and entries WOULD accumulate).
-    repeatedSpansManaged(corpus, k, hashGrams)._1
-
-  /** [[repeatedSpansWith]] plus the release handle for the persisted
-    * distinct-gram frame. The gram build (the codegen'd
+    * oracle grades. The distinct-gram frame is pinned with a lazy
+    * local checkpoint: the gram build (the codegen'd
     * [[graft.plans.WordGrams]] window kernel since r21) and its dedup
     * shuffle have THREE consumers (the shared-gram counts, the
-    * per-doc totals, the semi-join); persisting runs them once
-    * (r18 — the minhash_est/B46 precedent; the graded path drops the
-    * handle, `api.Graft.repeatedSpans` wires the listener). */
-  private[graft] def repeatedSpansManaged(corpus: DataFrame, k: Int,
-      hashGrams: Boolean): (DataFrame, () => Unit) = {
+    * per-doc totals, the semi-join); pinning runs them once (r18 —
+    * the minhash_est/B46 precedent). */
+  private[graft] def repeatedSpansWith(corpus: DataFrame, k: Int,
+      hashGrams: Boolean): DataFrame = {
     // r21: the gram windows come from the codegen'd WordGrams kernel
     // (one pass over the UTF-8 bytes) instead of a
     // transform/slice/array_join HOF fold — HOF lambdas are
@@ -1461,20 +1426,19 @@ object TrainingData {
       explode(graft.plans.WordGrams.grams(col("text"), k)).as("g"))
     val grams =
       (if (hashGrams) grams0.select(col("doc_id"), xxhash64(col("g")).as("g"))
-       else grams0).distinct().persist()
+       else grams0).distinct().transform(Checkpoints.truncate(_))
     val shared = grams.groupBy("g").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 2)
     val ng = grams.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     val nd = grams.join(shared.select("g"), Seq("g"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
-    val result = ng.join(nd, Seq("doc_id"), "left")
+    ng.join(nd, Seq("doc_id"), "left")
       .select(col("doc_id"),
         col("n_grams").cast("int").as("n_grams"),
         coalesce(col("n_dup"), lit(0L)).cast("int").as("n_dup"),
         (coalesce(col("n_dup"), lit(0L)).cast("double") / col("n_grams"))
           .as("dup_ratio"),
         (coalesce(col("n_dup"), lit(0L)) * 2 >= col("n_grams")).as("flagged"))
-    (result, () => { grams.unpersist(); () })
   }
 
   def similarityIvf(sp: SparkSession, dir: String): DataFrame = {
@@ -1528,10 +1492,11 @@ object TrainingData {
     // all four probe branches (exact, lsh, ivf, pq) scan the same
     // cast+bucketed corpus, and without a cache each branch re-runs
     // the parquet scan, the double cast, and the 8-plane bucket kernel
-    // (the r8 +8% drift was exactly this recompute, x5). The cache is
-    // plan-keyed, so repeated runs reuse one entry; at 100 TB the
-    // recall contract runs over a SAMPLED query panel against STORED
-    // indexes — the graded full-corpus cache is a bench-SF shape only.
+    // (the r8 +8% drift was exactly this recompute, x5). The bench
+    // clears the SQL cache before every rep, so each rep builds it;
+    // at 100 TB the recall contract runs over a SAMPLED query panel
+    // against STORED indexes — the graded full-corpus cache is a
+    // bench-SF shape only.
     val emb = Tables.embeddings(sp, dir)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
       .withColumn("bk", bucketOf(col("e")))

@@ -60,6 +60,16 @@ class CheckpointsSpec extends AnyFunSuite {
       assert(rddDirs(dir).size > before.size,
         "the CC closure must have taken reliable checkpoints")
 
+      // an operator's compute-once pin follows the same policy: on a
+      // checkpoint-dir'd session it is a reliable checkpoint, which
+      // survives executor loss (a local checkpoint's lost block fails
+      // the job instead of recomputing)
+      val prePin = rddDirs(dir).size
+      val text = "one two three four five six seven eight nine ten"
+      val docs = Seq((1L, text), (2L, text), (3L, "unrelated words only here")).toDF("doc_id", "text")
+      assert(api.Graft.dedupLines(docs).count() > 0)
+      assert(rddDirs(dir).size > prePin, "dedupLines' pin must be a reliable checkpoint here")
+
       // Both REGISTRY iterative ops end-to-end on real data: a full
       // convergence loop in reliable mode must (a) return exactly the
       // localCheckpoint-mode rows, (b) actually cut reliable

@@ -85,7 +85,7 @@ class CorpusStatsSpec extends AnyFunSuite {
         "key value table row scan merge batch part value the a key " +
         "value table row the a key value table row scan scan")
       .toDF("text")
-    val h = CorpusStats.statsPmiWith(hand, 5, 10)._1.collect()
+    val h = CorpusStats.statsPmiWith(hand, 5, 10).collect()
     assert(h.nonEmpty && h(0).getString(0) == "hong" && h(0).getString(1) == "kong")
     // the graded table: every row's pmi recomputes from the corpus
     // marginals (round-trip through the definition)

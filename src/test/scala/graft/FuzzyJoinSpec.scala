@@ -73,8 +73,10 @@ class FuzzyJoinSpec extends AnyFunSuite {
   }
 
   test("bucket cap plans as WindowGroupLimit; GRADED-corpus occupancy under the cap") {
-    val plan = Mining.fuzzyJoin(spark, dir).queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"), plan.take(2000))
+    // the capped variant frame is pinned (a local checkpoint), so
+    // the cap's plan is the one the pin executed when the op was built
+    val pins = PinPlans.capture(spark)(Mining.fuzzyJoin(spark, dir))
+    assert(pins.exists(_.contains("WindowGroupLimit")), pins.map(_.take(2000)).mkString("\n"))
     // uncapped occupancy of the FULL graded corpus (base + sub/del
     // plant clones — the clones share deletion variants with their
     // originals, so they are the occupancy that matters), at both

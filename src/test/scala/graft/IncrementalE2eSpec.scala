@@ -95,29 +95,17 @@ class IncrementalE2eSpec extends AnyFunSuite {
       s"keep-first entry must point both same-key docs at 33: ${out(34L)}")
   }
 
-  test("ingestTriage self-release fires on a WRITE of the result, not just collect()") {
-    // Regression net for the r12 listener-target bug: with the
-    // unanalyzed logical plan as the match target, a write action's
-    // command-wrapped (analyzed) plan never matched and the cache trio
-    // leaked on exactly the daily-batch path the overload exists for.
-    val sp = spark
-    import sp.implicits._
-    val history = Seq((10L, "the quick brown fox jumps over the lazy dog again today"))
-      .toDF("my_id", "body")
-    val batch = Seq((31L, "entirely novel musings about shuffle partitions and codegen"))
-      .toDF("my_id", "body")
-    val before = sp.sparkContext.getPersistentRDDs.size
-    val out = graft.api.Graft.ingestTriage(history, batch, "my_id", "body")
-    out.write.format("noop").mode("overwrite").save()
-    // the QueryExecutionListener bus delivers asynchronously — poll
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (sp.sparkContext.getPersistentRDDs.size > before &&
-        System.nanoTime() < deadline) Thread.sleep(50)
-    assert(sp.sparkContext.getPersistentRDDs.size <= before,
-      "the self-release listener must unpersist the triage caches after a write")
-  }
+  /** Pins one day's triage held while its written result was live. */
+  private def triageDay(history: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame): Int =
+    IntermediateLifetimeSpec.pinsHeldWhileLive(spark)(
+      graft.api.Graft.ingestTriage(history, batch, "my_id", "body"))
 
-  test("ingestTriageManaged: release handle unpersists the triage caches") {
+  test("ingestTriage self-release fires on a WRITE of the result, not just collect()") {
+    // The triage pins live as long as the result frame: after a WRITE
+    // (the daily-batch path; r12's listener-era bug leaked exactly
+    // here) and once the caller drops the result, the context cleaner
+    // must bring the session back to its persisted-RDD baseline.
     val sp = spark
     import sp.implicits._
     val history = Seq((10L, "the quick brown fox jumps over the lazy dog again today"))
@@ -125,26 +113,19 @@ class IncrementalE2eSpec extends AnyFunSuite {
     val batch = Seq((31L, "entirely novel musings about shuffle partitions and codegen"))
       .toDF("my_id", "body")
     val before = sp.sparkContext.getPersistentRDDs.size
-    val (out, release) =
-      graft.api.Graft.ingestTriageManaged(history, batch, "my_id", "body")
-    assert(out.collect().length == 1)
-    assert(sp.sparkContext.getPersistentRDDs.size > before,
-      "triage must have pinned its intermediate frames")
-    release()
-    // unpersist(blocking=false) unregisters synchronously; blocks drain async
-    assert(sp.sparkContext.getPersistentRDDs.size <= before,
-      "release() must unregister every triage cache entry")
+    assert(triageDay(history, batch) > 0, "triage must pin its intermediate frames")
+    assert(IntermediateLifetimeSpec.gcUntil(sp.sparkContext.getPersistentRDDs.size <= before),
+      "the triage pins outlived the unreachable result of a write")
   }
 
   test("soak: sequential daily triage batches leave zero cache residue per batch") {
     // The long-lived-session leak class this API has had twice (r10:
     // no release at all; r12: the listener matched the unanalyzed plan
-    // so the WRITE path never released): cache entries are plan-keyed,
-    // so one leaked trio PER DAILY BATCH accumulates without bound in
-    // a real ingest service. Drive >=5 distinct batches through one
-    // session — history grows each day, so every day's plan (and cache
-    // keys) differ — and assert the storage level is clean after each
-    // day's terminal write, not just after the last.
+    // so the WRITE path never released). Drive >=5 distinct batches
+    // through one session — history grows each day, so every day's
+    // plans differ — and assert the persisted-RDD count is back at
+    // baseline once each day's result is unreachable, not just after
+    // the last.
     val sp = spark
     import sp.implicits._
     val before = sp.sparkContext.getPersistentRDDs.size
@@ -157,15 +138,10 @@ class IncrementalE2eSpec extends AnyFunSuite {
         (day * 100L + 1, s"entirely novel musings number $day about shuffle partitions"),
         (day * 100L + 2, "the quick brown fox jumps over the lazy dog again today"))
         .toDF("my_id", "body")
-      val out = graft.api.Graft.ingestTriage(history, batch, "my_id", "body")
-      out.write.format("noop").mode("overwrite").save()
-      // the QueryExecutionListener bus delivers asynchronously — poll
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (sp.sparkContext.getPersistentRDDs.size > before &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-      assert(sp.sparkContext.getPersistentRDDs.size <= before,
-        s"triage cache residue after day $day's write — the self-release " +
-          "listener is not keeping a long-lived session clean")
+      assert(triageDay(history, batch) > 0, s"day $day's triage must pin its frames")
+      assert(IntermediateLifetimeSpec.gcUntil(sp.sparkContext.getPersistentRDDs.size <= before),
+        s"triage residue after day $day's result became unreachable — the pins " +
+          "are not keeping a long-lived session clean")
       history = history.union(batch) // tomorrow's index includes today's admits
     }
   }

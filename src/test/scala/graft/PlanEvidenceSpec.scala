@@ -14,6 +14,14 @@ class PlanEvidenceSpec extends AnyFunSuite {
   private def plan(name: String): String =
     Registry.byName(name).build(spark, dir).queryExecution.executedPlan.toString
 
+  /** The op's plan, and the plans of the frames it pinned while being
+    * built, which its own plan shows only as `Scan ExistingRDD`. */
+  private def planAndPins(name: String): (String, Seq[String]) = {
+    var built = ""
+    val pins = PinPlans.capture(spark) { built = plan(name) }
+    (built, pins)
+  }
+
   test("op_filter_project: predicates and pruned schema reach the parquet scan") {
     val p = plan("op_filter_project")
     assert(p.contains("PushedFilters:") && p.contains("l_shipdate"),
@@ -58,13 +66,20 @@ class PlanEvidenceSpec extends AnyFunSuite {
       "op_stats_heaps",      // 1-row report assembly (totals × OLS fit) — bounded
       "op_stats_pmi",        // 1-row normalizer (total bigram count N) — bounded
       "op_tfidf_topk")       // 1-row normalizer (doc count N) crossJoin — bounded
-    for (q <- Registry.all) {
-      val p = plan(q.name)
+    // op_stream_dsir trains op_dsir_weights' model while it is built,
+    // so its PINNED frames hold the same 1-row normalizer crossJoins;
+    // its own gate plan is still checked
+    val pinBroadcastExpand = deliberateBroadcastExpand + "op_stream_dsir"
+    def check(what: String, p: String, expandOk: Boolean): Unit = {
       assert(!p.contains("CartesianProduct"),
-        s"${q.name} plans an unbroadcast cartesian product:\n$p")
-      if (!deliberateBroadcastExpand(q.name))
-        assert(!p.contains("BroadcastNestedLoopJoin"),
-          s"${q.name} plans a nested-loop join:\n$p")
+        s"$what plans an unbroadcast cartesian product:\n$p")
+      if (!expandOk)
+        assert(!p.contains("BroadcastNestedLoopJoin"), s"$what plans a nested-loop join:\n$p")
+    }
+    for (q <- Registry.all) {
+      val (built, pins) = planAndPins(q.name)
+      check(q.name, built, deliberateBroadcastExpand(q.name))
+      pins.foreach(check(s"${q.name}'s pinned frame", _, pinBroadcastExpand(q.name)))
     }
   }
 
@@ -73,8 +88,8 @@ class PlanEvidenceSpec extends AnyFunSuite {
     // parse_file, DataConverter convert) is now a codegen'd Catalyst
     // expression; this sweeps the whole registry so none re-grows.
     for (q <- Registry.all) {
-      val p = plan(q.name)
-      assert(!p.contains("UDF"), s"${q.name} plans a Scala UDF:\n$p")
+      val (built, pins) = planAndPins(q.name)
+      for (p <- built +: pins) assert(!p.contains("UDF"), s"${q.name} plans a Scala UDF:\n$p")
     }
   }
 
@@ -111,12 +126,14 @@ class PlanEvidenceSpec extends AnyFunSuite {
     val p = plan("op_join_asof")
     // the op's compute tail is persisted before the graded sort (r22),
     // so the dump nests the real plan inside an InMemoryRelation whose
-    // AQE printout repeats every node once per section — count the
-    // executed section only
-    val body =
-      if (p.contains("== Final Plan =="))
-        p.split("== Final Plan ==").last.split("== Initial Plan ==").head
-      else p
+    // AQE printout repeats every node once per section. Count in the
+    // first non-initial section that holds the compute anchor (the
+    // as-of Window): which section comes LAST depends on how the AQE
+    // printouts nest, not on where the compute is.
+    val body = p.split("(?=== (?:Final|Initial) Plan ==)")
+      .filterNot(_.startsWith("== Initial Plan =="))
+      .find(_.contains("- Window ["))
+      .getOrElse(fail(s"no plan section holds the as-of Window:\n$p"))
     val hashExchanges = body.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(hashExchanges == 2,
       s"expected click-dedup + as-of-window shuffles only ($hashExchanges):\n$p")
@@ -136,21 +153,31 @@ class PlanEvidenceSpec extends AnyFunSuite {
     // node, still caught by the registry-wide sweep's allowlist.)
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // op_incremental_e2e caches its triage frames: a cached subtree
-    // PLANNED earlier (under the default threshold, by another test)
-    // would print its auto-broadcast joins inside InMemoryRelation and
-    // false-positive this sweep — drop all cache entries so every
-    // subtree re-plans under the no-broadcast conf, and again on exit
-    // so later tests re-cache under the default conf.
+    // a cached subtree PLANNED earlier (under the default threshold, by
+    // another test) would print its auto-broadcast joins inside
+    // InMemoryRelation and false-positive this sweep — drop all cache
+    // entries so every subtree re-plans under the no-broadcast conf,
+    // and again on exit so later tests re-cache under the default conf.
     spark.sharedState.cacheManager.clearCache()
+    // op_incremental_e2e pins its triage frames with local
+    // checkpoints: the built plan reads them as `Scan ExistingRDD`, and
+    // the triage joins ran in each pin's OWN plan when the op was
+    // built — so the sweep inspects those plans too
+    def noBroadcastHashJoin(what: String, p: String): Unit = {
+      val body = p.split("== Initial Plan ==").head
+      assert(!body.contains("BroadcastHashJoin"),
+        s"$what broadcast-hints a corpus-sized index side:\n$body")
+    }
     try {
-      for (n <- Seq("op_dedup_incremental", "op_dedup_minhash_incremental",
-          "op_index_update", "op_ann_incremental", "op_stream_minhash_probe",
-          "op_incremental_e2e")) {
-        val p = plan(n).split("== Initial Plan ==").head
-        assert(!p.contains("BroadcastHashJoin"),
-          s"$n broadcast-hints a corpus-sized index side:\n$p")
+      val pins = PinPlans.capture(spark) {
+        for (n <- Seq("op_dedup_incremental", "op_dedup_minhash_incremental",
+            "op_index_update", "op_ann_incremental", "op_stream_minhash_probe",
+            "op_incremental_e2e")) noBroadcastHashJoin(n, plan(n))
       }
+      val joinPins = pins.filter(_.contains("Join"))
+      assert(joinPins.length >= 3,
+        s"expected the three triage pins' join plans, captured ${joinPins.length}")
+      joinPins.foreach(noBroadcastHashJoin("a pinned triage frame", _))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
       spark.sharedState.cacheManager.clearCache()

@@ -85,4 +85,12 @@ class SampleWeightedSpec extends AnyFunSuite {
     val order = got.map(_._1).toSeq
     assert(order == (if (k1 > k4) Seq(1L, 4L) else Seq(4L, 1L)))
   }
+
+  test("API bound: k above 4096 is rejected before any plan is built") {
+    import spark.implicits._
+    val hand = Seq((1L, 1L)).toDF("doc_id", "w")
+    val e = intercept[IllegalArgumentException](api.Graft.sampleByWeight(hand, k = 4097))
+    assert(e.getMessage.contains("4097"))
+    assert(api.Graft.sampleByWeight(hand, k = 4096).collect().length == 1)
+  }
 }
